@@ -328,8 +328,9 @@ def versioned_commit(
         from pyspark.sql import functions as F
 
         # one agg over the written batch; re-read the dir so the stats
-        # describe exactly the committed bytes
-        batch = df.sparkSession.read.parquet(data_dir)
+        # describe exactly the committed bytes, under the schema this
+        # commit just wrote (no inference job)
+        batch = df.sparkSession.read.schema(df.schema).parquet(data_dir)
         row = batch.agg(
             *[F.min(c).alias(f"lo_{c}") for c in stats_cols],
             *[F.max(c).alias(f"hi_{c}") for c in stats_cols],
@@ -343,7 +344,7 @@ def versioned_commit(
     if member_cols:
         from pyspark.sql import functions as F
 
-        batch = df.sparkSession.read.parquet(data_dir)
+        batch = df.sparkSession.read.schema(df.schema).parquet(data_dir)
         # Membership columns are restricted to integral/string types:
         # the driver-side probe (manifest_dirs prune_eq) hashes Python
         # str(val), which equals Spark's cast-to-string only for those

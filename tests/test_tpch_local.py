@@ -52,6 +52,15 @@ def test_local_tpch_matches_duckdb(spark, fixture_dir, name):
     assert canon(got, df.columns) == canon(want, want_cols)
 
 
+def test_fixture_declared_schemas_match_footers(spark, fixture_dir):
+    """The locally generated tables (DuckDB copies plus partsupp) carry
+    exactly the catalog's declared schemas."""
+    from dwh_with_dask_spark.catalog import OPTIONAL_TABLES, TABLES
+    from tests.test_catalog import schema_drift
+
+    assert schema_drift(spark, fixture_dir, TABLES + OPTIONAL_TABLES) == {}
+
+
 def test_partsupp_has_four_distinct_suppliers_per_part(spark, fixture_dir):
     import duckdb
 

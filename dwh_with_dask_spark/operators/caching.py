@@ -2,7 +2,7 @@
 
 Several operators materialize an intermediate table because multiple
 consumers in their own plan would otherwise re-derive it (the inverted
-shingle index in ``dedup.ngram_jaccard_pairs``, the MinHash signature
+shingle index in ``dedup.pair_join``, the MinHash signature
 table in ``dedup.minhash_lsh_pairs``, the fingerprint table in
 ``curation.contamination_pairs``, the partition stamp in
 ``ids.sequential_id``). Those persists cannot be released inside the
@@ -13,7 +13,7 @@ the expensive stage and negate the persist.
 ``CacheScope`` makes the lifecycle explicit and caller-owned:
 
     with CacheScope() as scope:
-        pairs = ngram_jaccard_pairs(docs, scope=scope)
+        pairs = pair_join(docs, "jaccard", threshold=0.3, scope=scope)
         result = pairs.collect()          # caches live while needed
     # scope exit unpersists every intermediate — nothing left behind
 

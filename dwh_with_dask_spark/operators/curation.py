@@ -1465,8 +1465,8 @@ def compact_bm25_index(spark, path: str) -> dict:
     same summed stats, asserted in tests). Single writer. Returns the
     compacted corpus stats.
 
-    WHEN to compact (measured, sf1 corpus, scripts/exp_bm25_segments
-    .py → BENCH_SCALE.md): probe latency is flat through ~8 segments
+    WHEN to compact (measured, sf1 corpus,
+    ``scripts/bench_scale.bm25_segment_curve`` → BENCH_SCALE.md): probe latency is flat through ~8 segments
     (0.43/0.37 s at 1/8) and degrades past a few dozen (0.51 s at 64
     vs 0.27 s compacted — per-segment directory listing + sidecar
     reads are the cost, not the postings). Compaction itself cost

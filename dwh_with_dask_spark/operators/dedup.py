@@ -1,7 +1,8 @@
 """Deduplication operators for large-scale text corpora.
 
 North-star additions (ABSENT-IN-REFERENCE, SURVEY.md §2B): exact dedup,
-n-gram Jaccard pairs, MinHash+LSH near-dup, SimHash. All pure DataFrame
+n-gram Jaccard and containment pairs (``pair_join``), MinHash+LSH
+near-dup, SimHash. All pure DataFrame
 compositions — the hash primitives (sha2/md5/xxhash64) are Spark
 builtins, so everything stays JVM-side and codegen'd.
 
@@ -42,8 +43,7 @@ def text_tokens(col: Column | str) -> Column:
     ``list_filter``. Why it exists: the normalize-then-split form runs
     TWO regex passes over every byte of the corpus; at sf1 this form
     measured the tokenize+explode floor 1.24 s -> 0.72 s and cut the
-    whole token-aggregation query family ~40% (round-6 experiment,
-    scripts/exp_tokenize_floor.py)."""
+    whole token-aggregation query family ~40% (round-6 experiment)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), r"\s+"), lambda t: t != F.lit(""))
 
@@ -195,8 +195,7 @@ def _doc_shingles(
     grouping-keys rule) — so the exploded shingle rows, the widest
     table in the query, never shuffle a second time. The full
     mechanism write-up, measured alternatives, and regression history
-    live in ONE place: BASELINE.md's round-7 section (experiment:
-    scripts/exp_jaccard_shape.py; plan guard:
+    live in ONE place: BASELINE.md's round-7 section (plan guard:
     tests/test_plans.py::test_jaccard_plan_no_shingle_reshuffle).
     """
     toks_df = widen(
@@ -225,7 +224,7 @@ def tfidf_cosine_pairs(
 ) -> DataFrame:
     """TF-IDF-weighted cosine similarity for all document pairs above
     ``threshold`` — the weighted companion to the set-based
-    ``ngram_jaccard_pairs``: shared RARE tokens dominate the score,
+    Jaccard ``pair_join``: shared RARE tokens dominate the score,
     boilerplate contributes ~nothing, so it finds topical/near-dup
     pairs that unigram Jaccard dilutes.
 
@@ -265,7 +264,7 @@ def tfidf_cosine_pairs(
       construction → blocked; otherwise index. MEASURED at sf0.1
       (driver corpus: 31-token vocabulary, df ≈ 3.7k, sum(df²) =
       4.5e8 vs n² = 2.5e7): index 40.1 s → blocked 1.9 s, identical
-      output rows (scripts/exp_r15_tfidf_blocked.py).
+      output rows (round-15 A/B).
 
     ``max_token_df`` drops tokens in more than that many docs before
     the pair stage (IDF down-weights them anyway, so the cap costs
@@ -332,7 +331,7 @@ def tfidf_cosine_pairs(
     )
     # persisted: consumed by both final size joins (and, on the blocked
     # path, by the vector build) — round 15, same duplicated-subtree
-    # note as ngram_jaccard_pairs' sizes.
+    # note as pair_join's sizes.
     norms = scope.persist(
         w.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
     )
@@ -512,478 +511,223 @@ def _tfidf_blocked_dots(
     return dots
 
 
-def ngram_jaccard_pairs(
+def pair_join(
     df: DataFrame,
+    measure: str,
+    strategy: str = "naive",
+    *,
+    threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    threshold: float = 0.1,
     max_shingle_freq: int | None = None,
+    naive_budget: int = 1_000_000_000,
     scope: CacheScope | None = None,
+    decision_out: dict | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs above ``threshold``.
+    """Exact word-``n``-gram shingle-set pairs scoring >= ``threshold``.
 
-    Inverted-index plan: explode distinct shingles, self-join on the
-    shingle (id_a < id_b), count common shingles per pair, then
-    ``J = common / (|A| + |B| - common)``. All integer arithmetic until
-    the final division, so the result is bit-deterministic.
+    Output columns: ``id_a, id_b, n_common, n_a, n_b, <measure>``, with
+    ``n_a``/``n_b`` the distinct-shingle counts of each side. All
+    integer arithmetic until the one final division, so the result is
+    bit-deterministic.
 
-    ``max_shingle_freq`` drops shingles occurring in more than that many
-    docs before the self-join — the standard guard against the quadratic
-    blowup on boilerplate shingles at corpus scale (slightly lowers J for
-    affected pairs; leave None for exact semantics).
+    ``measure`` picks the score and the pair shape:
+
+    - ``"jaccard"``: ``J = common / (|A| + |B| - common)``, SYMMETRIC
+      pairs (``id_a < id_b``).
+    - ``"containment"``: ``C(A→B) = common / |A|``, ORDERED pairs with
+      ``id_a`` the contained doc and ``id_b`` the container. A short doc
+      quoted wholesale inside a long one has C ~ 1.0 but J ~ |A|/|B|,
+      so symmetric dedup never sees it. Near-identical docs pass in
+      both directions (two rows).
+
+    ``strategy`` picks the candidate generator; every strategy returns
+    the same rows except the frequency cap, which is a concession:
+
+    - ``"naive"``: the inverted-index self-join on the shingle, counting
+      common shingles once per unordered pair (containment emits both
+      directions from that one count with a 2-element explode). It costs
+      ``sum(df(s)^2)`` over shingles — quadratic in the hottest
+      shingle's document frequency. ``max_shingle_freq`` drops shingles
+      in more than that many docs before the self-join (broadcast
+      anti-join of the small hot set); denominators stay uncapped, so
+      the score is exact for untouched pairs and slightly low for
+      capped ones.
+    - ``"prefix"``: PPJoin prefix filtering (Bayardo et al. 2007, Xiao
+      et al. 2008), exact. Shingles are ranked by global rarity
+      (ascending df, shingle as tie-break) and only each doc's rarest
+      ``|A| - ceil(t|A|) + 1`` enter the index: two sets scoring >= t
+      must share one of them. Jaccard indexes the prefix on both sides;
+      containment joins the contained side's prefix against the
+      container's full ranking. A positional filter bounds the overlap
+      by ``1 + min(|A|-ra, |B|-rb)`` at a common shingle of ranks
+      ``(ra, rb)``; a valid pair's first common shingle always passes.
+      Candidates are verified exactly with one ``array_intersect`` of
+      per-doc shingle arrays. The ``-1e-9`` slacks can only admit extra
+      candidates, never drop a pair. It wins when content shingles are
+      near-unique (natural heavy-tailed corpora: 6.0 s vs 315.7 s naive
+      at 50k docs, identical pairs) and loses on near-uniform df (iid
+      Zipf words: 189 s vs 22 s naive).
+    - ``"auto"``: ``shingle_df_stats`` probes the df histogram and
+      ``choose_pair_strategy`` picks prefix, naive, or (only past
+      ``naive_budget``) naive with a cap. The choice is logged at INFO
+      and, if ``decision_out`` is a dict, stored there as
+      ``{strategy, cap, reason, stats}``.
+
+    Persists go to ``scope`` (see ``operators.caching``): the shingle
+    table and per-doc sizes (read by several consumers under different
+    aliases, which would otherwise re-derive them), the hot set, the
+    frame both prefix join sides read, and the verification arrays.
     """
-    # Persisted: the shingle table feeds doc sizes, (when capped) the
-    # hot-set aggregate, and BOTH sides of the self-join — without
-    # materialization each consumer re-derives scan→normalize→explode→
-    # distinct (measured 6 scans in the capped plan). One (id, shingle)
-    # row per distinct shingle occurrence is exactly the inverted index
-    # production systems store. Lifecycle: caller-owned via ``scope``
-    # (see operators.caching) — release after the final action.
+    if measure not in ("jaccard", "containment"):
+        raise ValueError(
+            f"unknown measure {measure!r}: use 'jaccard' or 'containment'"
+        )
+    if strategy not in ("naive", "prefix", "auto"):
+        raise ValueError(
+            f"unknown strategy {strategy!r}: use 'naive', 'prefix' or 'auto'"
+        )
+    if max_shingle_freq is not None and strategy != "naive":
+        raise ValueError("max_shingle_freq applies only to strategy='naive'")
+    jaccard = measure == "jaccard"
     scope, created = scoped(scope)
+    if strategy == "auto":
+        import logging
+
+        stats = shingle_df_stats(df, id_col, text_col, n, scope=scope)
+        choice = choose_pair_strategy(stats, naive_budget)
+        logging.getLogger("dwh_with_dask_spark.dedup").info(
+            "pair_join %s auto: strategy=%s (%s)",
+            measure, choice["strategy"], choice["reason"],
+        )
+        if decision_out is not None:
+            decision_out.update(stats=stats, **choice)
+        strategy = "prefix" if choice["strategy"] == "prefix" else "naive"
+        max_shingle_freq = choice["cap"]
+
     sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # sizes/hot are persisted too (round 15): each is consumed by BOTH
-    # join sides, and alias renaming above the aggregate makes the two
-    # subtrees canonically different, so without materialization each
-    # consumer re-runs a full pass + shuffle over the cached shingle
-    # table (the before plan shows the sizes aggregate twice, Exchanges
-    # 46/55, and the hot aggregate twice, Exchanges 15/29 —
-    # plans/r15/dedup_ngram_jaccard_capped_before.txt). Both frames are
-    # small by construction: sizes is one 16-byte row per document, hot
-    # is the boilerplate tail. Measured at sf0.1 (median of 5,
-    # scripts/exp_r15_jaccard_dup.py): uncapped 0.941 s → 0.744 s,
-    # capped 1.810 s → 1.680 s, rows asserted identical first.
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
+    sizes = scope.persist(sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh")))
 
-    joinable = sh
-    if max_shingle_freq is not None:
-        # The HOT set (df > cap) is small by construction — it is exactly
-        # the boilerplate tail the cap exists to remove — so subtract it
-        # with a broadcast anti-join: one map-side-combined agg shuffle to
-        # find it, zero shuffle to apply it. (Joining the full <=cap
-        # frequency table back instead would shuffle the corpus again.)
-        hot = scope.persist(
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_freq)
-            .select("shingle")
+    def side(frame: DataFrame, s: str, *cols: str) -> DataFrame:
+        """``frame`` with ``id``/``n_sh``/``__rk`` renamed for join side ``s``."""
+        names = {"id": f"id_{s}", "n_sh": f"n_{s}", "__rk": f"__rk{s}"}
+        return frame.select(
+            *[F.col(c).alias(names[c]) if c in names else c for c in cols]
         )
-        joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
 
-    a = joinable.select(F.col("id").alias("id_a"), "shingle")
-    b = joinable.select(F.col("id").alias("id_b"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+    if strategy == "naive":
+        joinable = sh
+        if max_shingle_freq is not None:
+            hot = scope.persist(
+                sh.groupBy("shingle")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") > max_shingle_freq)
+                .select("shingle")
+            )
+            joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
+        pairs = (
+            side(joinable, "a", "id", "shingle")
+            .join(side(joinable, "b", "id", "shingle"), "shingle")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            .join(side(sizes, "a", "id", "n_sh"), "id_a")
+            .join(side(sizes, "b", "id", "n_sh"), "id_b")
         )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
-    )
-    return attach(out, scope, created)
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.1,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs >= ``threshold`` via prefix filtering
-    (AllPairs-style) — same output as ``ngram_jaccard_pairs`` with
-    ``max_shingle_freq=None``, at a fraction of the join volume.
-
-    The naive inverted-index self-join costs sum(df(s)^2) over shingles
-    s — quadratic in the hottest shingle's document frequency, which is
-    what boilerplate text blows up. Prefix filtering prunes EXACTLY
-    (no semantic change, unlike the frequency cap):
-
-    1. order every document's shingles by global rarity (ascending
-       document frequency, shingle as tie-break);
-    2. index only each doc's PREFIX — its ``|A| - ceil(t*|A|) + 1``
-       rarest shingles. Theorem (Chaudhuri/Bayardo): two sets with
-       Jaccard >= t must share at least one prefix shingle under any
-       common total order — rarity order makes the surviving collision
-       lists the SHORTEST ones. Hot boilerplate shingles land in every
-       doc's suffix and never enter the index at all, removing the df^2
-       term the frequency cap only approximates away.
-    3. candidate pairs = prefix-index self-join + the length filter
-       (t*|A| <= |B| <= |A|/t, necessary for J >= t);
-    4. verify candidates EXACTLY: join the candidate pairs back to the
-       full shingle table on both sides and count the true
-       intersection, then apply the Jaccard threshold.
-
-    Cost shape: the verification join is proportional to candidates x
-    avg doc shingles, so the method wins exactly when the prefix index
-    makes candidates scarce — heavy-tailed shingle document frequencies
-    (natural-language corpora, where boilerplate is hot and content
-    shingles are near-unique) and high thresholds. MEASURED regime
-    boundary on the driver's synthetic corpus (tiny vocab, iid Zipf
-    words, 50k docs at local sf1): shingle df is near-uniform (~22
-    mean), nearly every doc pair shares a "rare" shingle, and
-    verification volume exceeds the naive plan's collision counting —
-    naive 22 s at any threshold vs prefix 189 s even at t=0.7. On that
-    distribution use ``ngram_jaccard_pairs`` (collision counting is one
-    map-side-combined groupBy, no distinct, no verify join) or the
-    frequency cap / MinHash-LSH scale paths. Prefix filtering is the
-    exact-answer tool for the boilerplate-skewed distributions the cap
-    would otherwise have to approximate on.
-
-    The ceil() guards subtract 1e-9 before rounding so float noise can
-    only lengthen a prefix or admit an extra candidate (both safe for
-    exactness), never drop a qualifying pair.
-    """
-    from pyspark.sql.window import Window
-
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # persisted: consumed by the rank join AND both final size joins
-    # (round 15, same duplicated-subtree note as ngram_jaccard_pairs)
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy(F.col("__df").asc(), F.col("shingle").asc())
-    ranked = (
-        sh.join(freq, "shingle")
-        .withColumn("__rk", F.row_number().over(w))
-        .join(sizes, "id")
-    )
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
-        + F.lit(1)
-    )
-    prefix = scope.persist(
-        ranked.filter(F.col("__rk") <= prefix_len).select(
-            "id", "shingle", "n_sh", "__rk"
+        if not jaccard:
+            pairs = pairs.select(
+                F.explode(
+                    F.array(
+                        F.struct("id_a", "id_b", "n_common", "n_a", "n_b"),
+                        F.struct(
+                            F.col("id_b").alias("id_a"),
+                            F.col("id_a").alias("id_b"),
+                            "n_common",
+                            F.col("n_b").alias("n_a"),
+                            F.col("n_a").alias("n_b"),
+                        ),
+                    )
+                ).alias("p")
+            ).select("p.*")
+    else:
+        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+        w = Window.partitionBy("id").orderBy(
+            F.col("__df").asc(), F.col("shingle").asc()
         )
-    )
-
-    pa = prefix.select(
-        F.col("id").alias("id_a"), "shingle",
-        F.col("n_sh").alias("n_a"), F.col("__rk").alias("__rka"),
-    )
-    pb = prefix.select(
-        F.col("id").alias("id_b"), "shingle",
-        F.col("n_sh").alias("n_b"), F.col("__rk").alias("__rkb"),
-    )
-    # PPJoin POSITIONAL filter (round 16, Xiao et al. 2008): a common
-    # shingle at ranks (ra, rb) bounds the true overlap by
-    # 1 + min(|A|-ra, |B|-rb); J >= t forces overlap >=
-    # ceil(t·(|A|+|B|)/(1+t)). Exact: a valid pair's FIRST common
-    # shingle always satisfies the bound (nothing precedes it on
-    # either side), so the pair survives via that match; the -1e-9
-    # slack can only ADMIT extra candidates, and the exact Jaccard
-    # threshold is re-applied after verification.
-    alpha = F.ceil(
-        (F.col("n_a") + F.col("n_b")).cast("double")
-        * F.lit(threshold / (1.0 + threshold))
-        - F.lit(1e-9)
-    )
-    cand = (
-        pa.join(pb, "shingle")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            # length filter: J >= t forces t <= |B|/|A| <= 1/t
-            & (F.col("n_b") >= F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
-            & (F.col("n_a") >= F.col("n_b") * F.lit(threshold) - F.lit(1e-9))
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("__rka"),
-                    F.col("n_b") - F.col("__rkb"),
-                )
-                >= alpha
+        ranked = (
+            sh.join(freq, "shingle")
+            .withColumn("__rk", F.row_number().over(w))
+            .join(sizes, "id")
+        )
+        in_prefix = F.col("__rk") <= (
+            F.col("n_sh")
+            - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
+            + F.lit(1)
+        )
+        cols = ("id", "shingle", "n_sh", "__rk")
+        na, nb = F.col("n_a"), F.col("n_b")
+        # Persist the frame BOTH join sides read, so the rank window runs
+        # once. alpha is the least overlap a pair scoring >= t must have.
+        if jaccard:
+            side_a = side_b = scope.persist(ranked.filter(in_prefix).select(*cols))
+            alpha = F.ceil(
+                (na + nb).cast("double") * F.lit(threshold / (1.0 + threshold))
+                - F.lit(1e-9)
+            )
+            keep = (
+                (F.col("id_a") < F.col("id_b"))
+                # length filter: J >= t forces t <= |B|/|A| <= 1/t
+                & (nb >= na * F.lit(threshold) - F.lit(1e-9))
+                & (na >= nb * F.lit(threshold) - F.lit(1e-9))
+            )
+        else:
+            side_b = scope.persist(ranked.select(*cols))
+            side_a = side_b.filter(in_prefix)
+            alpha = F.ceil(na * F.lit(threshold) - F.lit(1e-9))
+            keep = F.col("id_a") != F.col("id_b")
+        cand = (
+            side(side_a, "a", *cols)
+            .join(side(side_b, "b", *cols), "shingle")
+            .filter(
+                keep
+                & (F.lit(1) + F.least(na - F.col("__rka"), nb - F.col("__rkb")) >= alpha)
+            )
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        arrs = scope.persist(
+            sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
+        )
+        aa = arrs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__sa"))
+        ab = arrs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__sb"))
+        pairs = (
+            cand.join(aa, "id_a")
+            .join(ab, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.size(F.array_intersect("__sa", "__sb"))
+                .cast("long")
+                .alias("n_common"),
+                F.size("__sa").cast("long").alias("n_a"),
+                F.size("__sb").cast("long").alias("n_b"),
             )
         )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    # Exact verification via per-doc shingle ARRAYS (round 16): the
-    # old formulation joined candidates back to the exploded shingle
-    # table on BOTH sides — |cand| × avg-doc-shingles rows shuffled
-    # into the common-count aggregate (the measured 8-10 s stage at
-    # sf0.1). Two joins against a doc-count-sized array table move
-    # |cand| rows instead, and the intersection count is one JVM
-    # array_intersect per pair. Counts are identical: the shingle
-    # table is distinct-per-doc and array_intersect de-duplicates.
-    # n_a/n_b come free as array sizes (same values the sizes
-    # aggregate produced; cast long to keep the schema).
-    arrs = scope.persist(
-        sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
-    )
-    aa = arrs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__sa"))
-    ab = arrs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__sb"))
+    common = F.col("n_common").cast("double")
+    denom = F.col("n_a") + F.col("n_b") - F.col("n_common") if jaccard else F.col("n_a")
     out = (
-        cand.join(aa, "id_a")
-        .join(ab, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb"))
-            .cast("long")
-            .alias("n_common"),
-            F.size("__sa").cast("long").alias("n_a"),
-            F.size("__sb").cast("long").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
-    )
-    return attach(out, scope, created)
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """Exact ORDERED containment pairs: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|
-    >= ``threshold``, emitted as (id_a = the CONTAINED doc, id_b = the
-    container). The asymmetric companion to ``ngram_jaccard_pairs``: a
-    short document quoted wholesale inside a much longer one has
-    containment ~1.0 but Jaccard ~|A|/|B| — arbitrarily small — so
-    symmetric-threshold dedup never sees it. Quote/subset detection is
-    the standard reason curation pipelines run containment alongside
-    Jaccard (the contained doc is the one to drop).
-
-    Same inverted-index plan and cost shape as Jaccard: the expensive
-    symmetric common-shingle count is computed ONCE per unordered pair
-    (id_lo < id_hi), then both directions are emitted from that row by
-    a codegen'd 2-element explode — no second self-join, no union
-    re-running the join subtree. Near-identical docs legitimately pass
-    in both directions (two output rows). All integer arithmetic until
-    the final division, so the result is bit-deterministic.
-
-    ``max_shingle_freq``: same boilerplate guard as
-    ``ngram_jaccard_pairs`` (broadcast anti-join of the hot set);
-    None = exact semantics.
-    """
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # sizes/hot persisted for the same duplicated-subtree reason as
-    # ngram_jaccard_pairs (round 15; see the measurement note there) —
-    # both are consumed twice under different aliases.
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
-    joinable = sh
-    if max_shingle_freq is not None:
-        hot = scope.persist(
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_freq)
-            .select("shingle")
-        )
-        joinable = sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-    a = joinable.select(F.col("id").alias("id_lo"), "shingle")
-    b = joinable.select(F.col("id").alias("id_hi"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("id_lo") < F.col("id_hi"))
-        .groupBy("id_lo", "id_hi")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    slo = sizes.select(F.col("id").alias("id_lo"), F.col("n_sh").alias("n_lo"))
-    shi = sizes.select(F.col("id").alias("id_hi"), F.col("n_sh").alias("n_hi"))
-    sized = common.join(slo, "id_lo").join(shi, "id_hi")
-    dirs = sized.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_lo").alias("id_a"),
-                    F.col("id_hi").alias("id_b"),
-                    F.col("n_common"),
-                    F.col("n_lo").alias("n_a"),
-                    F.col("n_hi").alias("n_b"),
-                ),
-                F.struct(
-                    F.col("id_hi").alias("id_a"),
-                    F.col("id_lo").alias("id_b"),
-                    F.col("n_common"),
-                    F.col("n_hi").alias("n_a"),
-                    F.col("n_lo").alias("n_b"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.*")
-    out = (
-        dirs.withColumn(
-            "containment",
-            F.col("n_common").cast("double") / F.col("n_a").cast("double"),
-        )
-        .filter(F.col("containment") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
-    )
-    return attach(out, scope, created)
-
-
-def containment_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    scope: CacheScope | None = None,
-) -> DataFrame:
-    """EXACT containment pairs >= ``threshold`` via prefix filtering —
-    same output as ``containment_pairs(max_shingle_freq=None)`` at a
-    fraction of the join volume on boilerplate-skewed corpora, with NO
-    semantic concession (unlike the frequency cap).
-
-    The asymmetric prefix theorem: if C(A→B) >= t then A shares at
-    least ``ceil(t·|A|)`` shingles with B, so B must contain one of
-    A's first ``|A| - ceil(t·|A|) + 1`` shingles under ANY total
-    order — the same prefix length as the Jaccard filter, applied to
-    the CONTAINED side only. Index each doc's prefix (rarest-first
-    order); join it against the FULL shingle table as the container
-    side. Hot boilerplate shingles land in every doc's suffix and
-    never enter the prefix index, so the ``df(s)²`` blowup term
-    becomes ``prefixdf(s)·df(s)`` with ``prefixdf(hot) = 0`` — the
-    quadratic term vanishes exactly where the uncapped plan exhausts
-    the heap. Candidates are verified EXACTLY against the full
-    shingle table. Same regime boundary as the Jaccard prefix filter:
-    on near-uniform synthetic shingle distributions verification
-    volume can exceed naive collision counting (see
-    ``ngram_jaccard_pairs_prefix``). MEASURED on the driver-derived
-    corpora (iid-Zipf words, small vocab — pathologically anti-prefix:
-    even "rare" shingles collide broadly, so candidates are not
-    scarce): 50k-doc boilerplate-skew corpus, t=0.8 — naive 48.5 s,
-    prefix 317.7 s. And on the NATURAL heavy-tailed df shape
-    (.localdata/skewnl: Zipf(1.1) 50k-word vocab, 50% sharing a
-    boilerplate header, t=0.8) the ranking flips decisively: prefix
-    6.0 s vs naive 315.7 s — 52x, identical pairs. Use this operator
-    on natural corpora where content shingles are near-unique; on
-    near-uniform distributions use the naive or capped plan.
-    """
-    from pyspark.sql.window import Window
-
-    scope, created = scoped(scope)
-    sh = scope.persist(_doc_shingles(df, id_col, text_col, n))
-    # persisted: consumed by the rank join AND both final size joins
-    # (round 15, same duplicated-subtree note as ngram_jaccard_pairs)
-    sizes = scope.persist(
-        sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy("id").orderBy(
-        F.col("__df").asc(), F.col("shingle").asc()
-    )
-    # ranked is consumed by BOTH join sides now (round 16: the
-    # container side carries its rank for the positional filter) —
-    # persist it so the freq join + rank window run once.
-    ranked = scope.persist(
-        sh.join(freq, "shingle")
-        .withColumn("__rk", F.row_number().over(w))
-        .join(sizes, "id")
-        .select("id", "shingle", "__rk", "n_sh")
-    )
-    prefix_len = (
-        F.col("n_sh")
-        - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
-        + F.lit(1)
-    )
-    pa = (
-        ranked.filter(F.col("__rk") <= prefix_len)
-        .select(
-            F.col("id").alias("id_a"), "shingle",
-            F.col("n_sh").alias("n_a"), F.col("__rk").alias("__rka"),
-        )
-    )
-    pb = ranked.select(
-        F.col("id").alias("id_b"), "shingle",
-        F.col("n_sh").alias("n_b"), F.col("__rk").alias("__rkb"),
-    )
-    # PPJoin POSITIONAL filter, asymmetric form (round 16): a common
-    # shingle at ranks (ra, rb) bounds the overlap by
-    # 1 + min(|A|-ra, |B|-rb); C(A→B) >= t forces overlap >=
-    # ceil(t·|A|). Exact — a valid pair's FIRST common shingle (both
-    # sides rank under the same global rarity order) satisfies the
-    # bound, so the pair survives via that match; the -1e-9 slack only
-    # admits extras and the exact containment threshold is re-applied
-    # after verification. At t = 0.8 this cuts the candidate set hard
-    # (both ranks must sit in the first ~fifth of their documents).
-    alpha = F.ceil(F.col("n_a") * F.lit(threshold) - F.lit(1e-9))
-    cand = (
-        pa.join(pb, "shingle")
-        .filter(
-            (F.col("id_a") != F.col("id_b"))
-            & (
-                F.lit(1)
-                + F.least(
-                    F.col("n_a") - F.col("__rka"),
-                    F.col("n_b") - F.col("__rkb"),
-                )
-                >= alpha
-            )
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-    # exact verification via per-doc shingle arrays — same round-16
-    # rewrite as ngram_jaccard_pairs_prefix (|cand| rows moved instead
-    # of |cand| × doc-shingles; identical counts)
-    arrs = scope.persist(
-        sh.groupBy("id").agg(F.collect_list("shingle").alias("__shs"))
-    )
-    aa = arrs.select(F.col("id").alias("id_a"), F.col("__shs").alias("__sa"))
-    ab = arrs.select(F.col("id").alias("id_b"), F.col("__shs").alias("__sb"))
-    out = (
-        cand.join(aa, "id_a")
-        .join(ab, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__sa", "__sb"))
-            .cast("long")
-            .alias("n_common"),
-            F.size("__sa").cast("long").alias("n_a"),
-            F.size("__sb").cast("long").alias("n_b"),
-        )
-        .withColumn(
-            "containment",
-            F.col("n_common").cast("double") / F.col("n_a").cast("double"),
-        )
-        .filter(F.col("containment") >= F.lit(threshold))
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "containment")
+        pairs.withColumn(measure, common / denom.cast("double"))
+        .filter(F.col(measure) >= F.lit(threshold))
+        .select("id_a", "id_b", "n_common", "n_a", "n_b", measure)
     )
     return attach(out, scope, created)
 
 
 # ------------------------------------------------------------------
-# Auto-strategy dispatch for the exact pair-dedup family (round 15).
+# Auto-strategy dispatch for ``pair_join`` (round 15).
 #
-# The engine ships three exact-pair plans per metric whose measured
+# The engine has three shingle-pair plans per measure whose measured
 # winner flips 52x with the corpus's shingle document-frequency shape
 # (BENCH_SCALE round-14 containment table): prefix filtering wins on
 # natural heavy-tailed corpora (content shingles near-unique, hot
@@ -1006,7 +750,7 @@ def shingle_df_stats(
     scope: CacheScope | None = None,
 ) -> dict:
     """ONE-aggregate probe of the shingle document-frequency histogram
-    — the dispatch evidence for ``*_pairs_auto``. Costs one map-side-
+    — the dispatch evidence for ``pair_join(strategy="auto")``. Costs one map-side-
     combined groupBy over the shingle table (the same aggregate the
     capped and prefix plans compute anyway; the persisted shingle
     table is shared with the dispatched plan via the scope /
@@ -1132,97 +876,6 @@ def choose_pair_strategy(
     }
 
 
-def _pair_auto(
-    metric: str,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-    naive_budget: int,
-    scope: CacheScope | None,
-    decision_out: dict | None,
-) -> DataFrame:
-    import logging
-
-    scope, created = scoped(scope)
-    stats = shingle_df_stats(df, id_col, text_col, n, scope=scope)
-    choice = choose_pair_strategy(stats, naive_budget)
-    logging.getLogger("dwh_with_dask_spark.dedup").info(
-        "%s_pairs_auto: strategy=%s (%s)",
-        metric,
-        choice["strategy"],
-        choice["reason"],
-    )
-    if decision_out is not None:
-        decision_out.update(stats=stats, **choice)
-    fns = {
-        ("jaccard", "naive"): ngram_jaccard_pairs,
-        ("jaccard", "prefix"): ngram_jaccard_pairs_prefix,
-        ("containment", "naive"): containment_pairs,
-        ("containment", "prefix"): containment_pairs_prefix,
-    }
-    kw = dict(
-        id_col=id_col, text_col=text_col, n=n, threshold=threshold,
-        scope=scope,
-    )
-    if choice["strategy"] == "capped":
-        base = (
-            ngram_jaccard_pairs if metric == "jaccard" else containment_pairs
-        )
-        out = base(df, max_shingle_freq=choice["cap"], **kw)
-    else:
-        out = fns[(metric, choice["strategy"])](df, **kw)
-    return attach(out, scope, created)
-
-
-def ngram_jaccard_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.1,
-    naive_budget: int = 1_000_000_000,
-    scope: CacheScope | None = None,
-    decision_out: dict | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs with AUTOMATIC plan choice: probe the
-    shingle df histogram (one aggregate — ``shingle_df_stats``), then
-    dispatch to the measured winner among the naive inverted index,
-    the prefix filter, and (only past the exact-plan budget) the
-    frequency cap — see ``choose_pair_strategy`` for the decision tree
-    and the measurements behind each edge. The choice is logged at
-    INFO and, when ``decision_out`` (a dict) is passed, recorded there
-    as ``{strategy, cap, reason, stats}``. Output schema and — on the
-    naive/prefix branches — exact bit-for-bit results match
-    ``ngram_jaccard_pairs``."""
-    return _pair_auto(
-        "jaccard", df, id_col, text_col, n, threshold, naive_budget,
-        scope, decision_out,
-    )
-
-
-def containment_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    naive_budget: int = 1_000_000_000,
-    scope: CacheScope | None = None,
-    decision_out: dict | None = None,
-) -> DataFrame:
-    """Exact ordered-containment pairs with AUTOMATIC plan choice —
-    the containment twin of ``ngram_jaccard_pairs_auto`` (same probe,
-    same decision tree, same measured regime boundaries; see
-    ``choose_pair_strategy``). On the naive/prefix branches the result
-    is bit-identical to ``containment_pairs``."""
-    return _pair_auto(
-        "containment", df, id_col, text_col, n, threshold, naive_budget,
-        scope, decision_out,
-    )
-
-
 def _minhash_cols(num_hashes: int, hash_family: str) -> list:
     """Per-permutation hash expressions over the ``shingle`` column.
 
@@ -1260,7 +913,7 @@ def _minhash_sql(num_hashes: int, hash_family: str) -> list[str]:
     # mod 2^32 as a bitmask: a and b are 32-bit non-negative (conv of 8
     # hex chars), so a + 65·b < 2^38 and `x & (2^32-1)` is bit-identical
     # to pmod(x, 2^32) — but one AND instead of pmod's two modulos.
-    # Round-15 A/B (scripts/exp_r15_minhash_mod.py, sf0.1, median of 5):
+    # Round-15 A/B (sf0.1, median of 5):
     # signature build 0.488 s → 0.408 s, full LSH query 0.860 → 0.665 s;
     # signatures asserted bit-identical across all docs before timing.
     # (codegen subexpression elimination evaluates the shared digest
@@ -1318,27 +971,6 @@ def minhash_signatures(
         f"min({s})" for s in _minhash_sql(num_hashes, hash_family)
     ) + ") as sig"
     return sh.groupBy("id").agg(F.expr(sig))
-
-
-def _band_bucket(band: int, r: int, hash_family: str) -> Column:
-    """One band's bucket key from the ``sig`` array column — always
-    ``xxhash64`` over the band's r slot values (round 14; the
-    ``hash_family`` parameter is kept for signature symmetry but no
-    longer selects the bucket function).
-
-    Why the md5 family doesn't need md5 BUCKETS: the bucket is internal
-    grouping plumbing — it never appears in any output, and ANY
-    function injective up to hash collisions produces the SAME
-    candidate set as grouping on the band's raw slot values. The
-    DuckDB oracle twins therefore join candidates on the raw
-    comma-joined slot key (exactly reproducible by construction),
-    while Spark shuffles an 8-byte xxhash64 key. The round-13 60-bit
-    md5 bucket paid one commons-codec digest per exploded band element
-    (interpreted, a MessageDigest per call): the banded stage measured
-    0.57 s md5 vs 0.33 s xxhash64 at sf0.1, and the candidate
-    self-join pays it twice."""
-    vals = ", ".join(f"sig[{band * r + j}]" for j in range(r))
-    return F.expr(f"xxhash64({vals})")
 
 
 def minhash_lsh_pairs(
@@ -1752,7 +1384,14 @@ def _banded_expr(bands: int, r: int):
     """The band-explode generator as ONE parsed expression (round 16,
     same py4j-construction-cost rationale as ``_minhash_sql``):
     explode(array(struct(band, xxhash64(band slots)), ...)) — identical
-    tree to the per-band DSL build."""
+    tree to the per-band DSL build.
+
+    The bucket is always xxhash64, for every hash family (round 14). It
+    is internal grouping plumbing that never reaches an output, and any
+    function injective up to hash collisions yields the same candidate
+    set as grouping on the raw slot values — which is what the DuckDB
+    oracles join on. An md5 bucket cost one interpreted digest per
+    exploded band element (banded stage 0.57 s vs 0.33 s at sf0.1)."""
     entries = ", ".join(
         "struct({b} as band, xxhash64({vals}) as bucket)".format(
             b=band,

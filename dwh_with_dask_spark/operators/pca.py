@@ -36,9 +36,9 @@ from pyspark.sql.types import ArrayType, DoubleType
 
 # round-16 A/B toggle for logreg_fit's training-set persist (VERDICT
 # r15 ask #3): True = the round-15 behavior (persist the projected
-# (vec, target) columns across the GD loop). Flipped only by
-# scripts/exp_r16_logreg_ab.py; the shipped default records the A/B's
-# verdict.
+# (vec, target) columns across the GD loop). Flipped only by the
+# round-16 A/B experiment (OPTIMIZATION_r16.md); the shipped default
+# records the A/B's verdict.
 _PERSIST_TRAIN = True
 
 
@@ -267,8 +267,8 @@ def logreg_fit(
     # and without materialization each of the T scans re-runs the
     # source scan + projection (the MLlib iterative-training idiom —
     # cache the training set, not the lineage). Round 16: adjudicated
-    # by an interleaved same-process A/B (scripts/exp_r16_logreg_ab.py,
-    # VERDICT r15 ask #3) — see OPTIMIZATION_r16.md for the verdict;
+    # by an interleaved same-process A/B (VERDICT r15 ask #3) — see
+    # OPTIMIZATION_r16.md for the verdict;
     # ``_PERSIST_TRAIN`` is the A/B toggle. Identical results either
     # way — the fold is per-partition and persist preserves partition
     # contents.

@@ -1,10 +1,9 @@
 """Text-analysis operators for training-data pipelines.
 
 North-star additions (ABSENT-IN-REFERENCE, SURVEY.md §2B): token
-counting, quality scoring, language-ID heuristic, document
-fingerprinting. All built-in Column expressions — these run inside
-whole-stage codegen over the scan, so a 100 TB corpus pays exactly one
-pass with no Python involved.
+counting, language-ID heuristic, document fingerprinting. All built-in
+Column expressions — these run inside whole-stage codegen over the scan,
+so a 100 TB corpus pays exactly one pass with no Python involved.
 """
 
 from __future__ import annotations
@@ -106,22 +105,6 @@ def lang_id(col: Column | str) -> Column:
         best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
         best_score = F.greatest(best_score, s)
     return best_lang
-
-
-def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword presence
-    + sane mean token length + low punctuation noise. Weights are the
-    usual public-pipeline (C4/Gopher-style) rule-of-thumb filters reduced
-    to four binary signals averaged."""
-    n_tok = token_count(col)
-    len_ok = (n_tok >= 10) & (n_tok <= 100000)
-    sw_ok = stopword_ratio(col) >= 0.01
-    mtl = mean_token_len(col)
-    mtl_ok = (mtl >= 2.0) & (mtl <= 12.0)
-    punct_ok = punct_ratio(col) <= 0.3
-    return (
-        len_ok.cast("int") + sw_ok.cast("int") + mtl_ok.cast("int") + punct_ok.cast("int")
-    ).cast("double") / F.lit(4.0)
 
 
 def doc_fingerprint(col: Column | str, n: int = 5) -> Column:
@@ -317,24 +300,6 @@ def bigram_logprob_scores(
                 6,
             ).alias("avg_logprob"),
         )
-    )
-
-
-def text_profile(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """One row per doc with the full stats bundle (single scan)."""
-    return df.select(
-        F.col(id_col),
-        token_count(text_col).alias("n_tokens"),
-        bpe_ish_token_count(text_col).alias("n_subword_tokens"),
-        F.length(text_col).alias("n_chars"),
-        mean_token_len(text_col).alias("mean_token_len"),
-        punct_ratio(text_col).alias("punct_ratio"),
-        stopword_ratio(text_col).alias("stopword_ratio"),
-        lang_id(text_col).alias("lang_pred"),
-        quality_score(text_col).alias("quality"),
-        doc_fingerprint(text_col).alias("fingerprint"),
     )
 
 

@@ -164,17 +164,18 @@ def dedup_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_ngram_jaccard", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard pairs >= 0.30 via the inverted shingle
-    index (operators.dedup.ngram_jaccard_pairs) — integer arithmetic up
-    to one final division, so it hash-matches the oracle exactly."""
-    return D.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    index (operators.dedup.pair_join, naive strategy) — integer
+    arithmetic up to one final division, so it hash-matches the oracle
+    exactly."""
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"), "jaccard", n=3, threshold=0.30
     )
 
 
 @query("dedup_ngram_jaccard_prefix", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AllPairs-style prefix-filtered exact Jaccard
-    (operators.dedup.ngram_jaccard_pairs_prefix): only each document's
+    (operators.dedup.pair_join, prefix strategy): only each document's
     rarest |A| - ceil(t|A|) + 1 shingles enter the index (pairs with
     J >= t provably share a prefix shingle), candidates are verified
     against the full shingle table — bit-identical to
@@ -184,8 +185,12 @@ def dedup_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's near-uniform synthetic shingle distribution the naive
     collision count is faster — see the operator docstring for the
     measured regime boundary."""
-    return D.ngram_jaccard_pairs_prefix(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"),
+        "jaccard",
+        "prefix",
+        n=3,
+        threshold=0.30,
     )
 
 
@@ -229,7 +234,7 @@ _CONTAINMENT_ORACLE = f"""
 
 @query("dedup_containment", _CONTAINMENT_ORACLE)
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment dedup (operators.dedup.containment_pairs):
+    """Asymmetric containment dedup (operators.dedup.pair_join, naive):
     ordered pairs where >= 80% of the contained doc's 3-gram shingles
     appear in the container. Catches quote/subset duplication that
     symmetric Jaccard structurally misses (a short doc inside a long
@@ -237,15 +242,15 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     common-count join, both directions from a 2-element explode;
     integer arithmetic to one final division — full hash-match
     oracle."""
-    return D.containment_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"), "containment", n=3, threshold=0.80
     )
 
 
 @query("dedup_containment_prefix", _CONTAINMENT_ORACLE)
 def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT prefix-filtered containment
-    (operators.dedup.containment_pairs_prefix): only each doc's
+    (operators.dedup.pair_join, prefix strategy): only each doc's
     |A| - ceil(t|A|) + 1 rarest shingles enter the index as contained-
     side candidates (the asymmetric prefix theorem), the container side
     stays full, candidates verify exactly — bit-identical to
@@ -253,15 +258,19 @@ def dedup_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate shingles never enter the prefix, so the df² blowup
     that exhausts the uncapped plan's heap at sf10 becomes
     prefixdf·df with prefixdf(hot) = 0."""
-    return D.containment_pairs_prefix(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"),
+        "containment",
+        "prefix",
+        n=3,
+        threshold=0.80,
     )
 
 
 @query("dedup_ngram_jaccard_auto", _JACCARD_EXACT_ORACLE)
 def dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-dispatched exact Jaccard
-    (operators.dedup.ngram_jaccard_pairs_auto): one cheap aggregate
+    (operators.dedup.pair_join, auto strategy): one cheap aggregate
     over the shingle df histogram picks the measured winner — prefix
     on heavy-tailed natural corpora (52x on skewnl), naive on
     near-uniform synthetic ones, frequency cap only past the
@@ -269,19 +278,27 @@ def dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform-within-budget and dispatches to the naive plan, so
     the result hash-matches the same exact oracle as
     dedup_ngram_jaccard."""
-    return D.ngram_jaccard_pairs_auto(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.30
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"),
+        "jaccard",
+        "auto",
+        n=3,
+        threshold=0.30,
     )
 
 
 @query("dedup_containment_auto", _CONTAINMENT_ORACLE)
 def dedup_containment_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-dispatched exact containment
-    (operators.dedup.containment_pairs_auto) — same histogram probe
+    (operators.dedup.pair_join, auto strategy) — same histogram probe
     and decision tree as the Jaccard twin; exact oracle because the
     driver corpora dispatch to an exact branch."""
-    return D.containment_pairs_auto(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.80
+    return D.pair_join(
+        load_table(spark, sf_dir, "documents"),
+        "containment",
+        "auto",
+        n=3,
+        threshold=0.80,
     )
 
 
@@ -334,8 +351,9 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf10 (500k synthetic docs) where this capped plan completes; on
     boilerplate-skewed natural corpora the cap removes exactly the hot
     boilerplate. The DuckDB oracle applies the identical cap."""
-    return D.containment_pairs(
+    return D.pair_join(
         load_table(spark, sf_dir, "documents"),
+        "containment",
         n=3,
         threshold=0.80,
         max_shingle_freq=50,
@@ -379,8 +397,9 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes |A|, |B| stay uncapped, so J is exact for pairs untouched by
     the cap and slightly underestimated for capped ones; the DuckDB
     oracle applies the identical cap, so this is hash-checked too."""
-    return D.ngram_jaccard_pairs(
+    return D.pair_join(
         load_table(spark, sf_dir, "documents"),
+        "jaccard",
         n=3,
         threshold=0.30,
         max_shingle_freq=50,
@@ -434,7 +453,7 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle computes the same fixpoint with a recursive CTE —
     one of the rare iterative operators with an exact SQL twin."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, n=3, threshold=0.30).select("id_a", "id_b")
+    pairs = D.pair_join(docs, "jaccard", n=3, threshold=0.30).select("id_a", "id_b")
     return D.dedup_components(docs, pairs)
 
 

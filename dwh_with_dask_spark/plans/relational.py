@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1891,23 +1892,22 @@ def source_chars_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate pandas UDF (the remaining UDF-surface variant:
     SCALAR/ITER/map/apply/WithState/UDTF/DataSource are covered
     elsewhere): per-source geometric mean of document length as an
-    Arrow-batched GROUPED_AGG — exp(mean(ln x)) per group, one numpy
+    Arrow-batched grouped aggregate (``pd.Series -> float`` type hints
+    make it one) — exp(mean(ln x)) per group, one numpy
     reduction per group partition. round(,6) absorbs the
     summation-order drift of the log-mean (the repo's standard
     order-dependent-sum idiom); the oracle is the same closed form in
     SQL."""
-    from pyspark.sql.functions import PandasUDFType
-
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
 
-    @F.pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    @F.pandas_udf("double")
+    def geomean(v: pd.Series) -> float:
         import numpy as np
 
         return float(np.exp(np.log(v.to_numpy(dtype="float64")).mean()))
 
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_rows(v):
+    @F.pandas_udf("long")
+    def n_rows(v: pd.Series) -> int:
         # Catalyst refuses to MIX grouped-agg pandas UDFs with built-in
         # aggregates in one Aggregate, so the count rides the same
         # Arrow batch instead of F.count

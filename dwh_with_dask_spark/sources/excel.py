@@ -8,59 +8,32 @@ Reference behavior re-expressed:
 
 Design for scale: a single .xlsx is inherently a driver-side object (zip
 of XML, no splittable row groups), so the honest architecture is
-**ingest-to-Parquet**: read the workbook once on the driver (pandas /
-openpyxl), write Parquet, and let every downstream query run
-distributed. ``excel_to_parquet`` is that step; ``read_excel_sheet``
-covers the interactive path. For *many* workbooks, parallelize across
+**ingest-to-Parquet**: read the workbook once on the driver, write
+Parquet, and let every downstream query run distributed.
+``excel_to_parquet`` is that step; ``read_excel_sheet`` covers the
+interactive path. For *many* workbooks, parallelize across
 files: binaryFile scan + mapInPandas parsing per executor —
 ``read_excel_many``.
 
-Engines: pandas+openpyxl when installed; otherwise the stdlib OOXML
-parser (sources.xlsx_lite — zipfile + ElementTree over the public
-ECMA-376 format), so ingestion of the reference workbook works in a
-bare runtime too.
+Engine: the stdlib OOXML parser only (sources.xlsx_lite — zipfile +
+ElementTree over the public ECMA-376 format), on the driver and in the
+executors alike. One parser means a sheet parses to the same values
+and types on every host, whatever optional Excel libraries it has.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-try:  # gated: not guaranteed in every runtime
-    import pandas as pd
-except ImportError:  # pragma: no cover
-    pd = None
-
-
-def _have_openpyxl() -> bool:
-    try:
-        import openpyxl  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _require_excel_engine() -> None:
-    if pd is None:
-        raise NotImplementedError("pandas not available for the Excel bridge")
+from dwh_with_dask_spark.sources import xlsx_lite
 
 
 def _read_sheet_pdf(source, sheet_name: str | int, header: int | None):
-    """One sheet → pandas DataFrame, via pd.read_excel when openpyxl is
-    present, else the stdlib OOXML parser (sources.xlsx_lite) with
+    """One sheet → pandas DataFrame via the stdlib OOXML parser, with
     pandas-compatible header semantics (Unnamed: N for blank header
     cells, '.k' suffixes for duplicate names)."""
-    if _have_openpyxl():
-        pdf = pd.read_excel(source, sheet_name=sheet_name, header=header)
-        if header is None:
-            pdf.columns = [f"_c{i}" for i in range(len(pdf.columns))]
-        else:
-            pdf.columns = [str(c) for c in pdf.columns]
-        return pdf
-
-    from dwh_with_dask_spark.sources import xlsx_lite
-
     grid = xlsx_lite.sheet_rows(source, sheet_name)
     if header is None:
         names = [f"_c{i}" for i in range(len(grid[0]) if grid else 0)]
@@ -89,10 +62,7 @@ def read_excel_sheet(
 
     ``header=1`` skips the title row like the reference; ``header=None``
     gives positional _c0.._cN columns (the key/value sheet case).
-    Engine: pandas+openpyxl when available, stdlib OOXML parser
-    otherwise — same shape either way.
     """
-    _require_excel_engine()
     pdf = _read_sheet_pdf(path, sheet_name, header)
     return spark.createDataFrame(pdf.astype(object).where(pd.notna(pdf), None))
 
@@ -137,12 +107,11 @@ def read_excel_many(
 ) -> DataFrame:
     """Distributed many-workbook reader: binaryFile scan + mapInPandas.
 
-    Each executor parses its own workbooks (openpyxl or the stdlib OOXML
-    parser over the binary content), so ingest scales with the number of
-    files. ``schema`` must be supplied (arbitrary sheets can't be
+    Each executor parses its own workbooks (the stdlib OOXML parser over
+    the binary content), so ingest scales with the number of files.
+    ``schema`` must be supplied (arbitrary sheets can't be
     schema-inferred distributedly).
     """
-    _require_excel_engine()
     if schema is None:
         raise ValueError("schema is required for the distributed Excel reader")
     import io

@@ -1,16 +1,16 @@
 """Minimal stdlib .xlsx sheet reader (ECMA-376 / ISO 29500 SpreadsheetML).
 
-Fallback engine for runtimes without openpyxl: a workbook is a zip of
-XML parts. This module parses ``xl/workbook.xml`` (sheet name →
-relationship id), the workbook rels (rel id → worksheet part),
-``xl/sharedStrings.xml``, and the worksheet's ``sheetData`` rows into a
-dense row-major grid. Cell types covered: shared strings (``t="s"``),
-inline strings (``t="inlineStr"``), formula-cached strings
-(``t="str"``), booleans (``t="b"``), and numbers (returned as float —
-column-stable for Spark/Arrow inference).
+The engine's only Excel parser: a workbook is a zip of XML parts. This
+module parses ``xl/workbook.xml`` (sheet name → relationship id), the
+workbook rels (rel id → worksheet part), ``xl/sharedStrings.xml``, and
+the worksheet's ``sheetData`` rows into a dense row-major grid. Cell
+types covered: shared strings (``t="s"``), inline strings
+(``t="inlineStr"``), formula-cached strings (``t="str"``), booleans
+(``t="b"``), and numbers (returned as float — column-stable for
+Spark/Arrow inference).
 
-Driver-side by design, same as the openpyxl bridge: a single workbook is
-not a splittable source, so the scale story remains ingest-to-Parquet
+Driver-side by design: a single workbook is not a splittable source, so
+the scale story remains ingest-to-Parquet
 (sources.excel.excel_to_parquet). For many-workbook ingest the parser
 also accepts an open binary file object, so executors can parse workbook
 bytes from a binaryFile scan (sources.excel.read_excel_many).

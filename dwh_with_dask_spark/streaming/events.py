@@ -255,46 +255,6 @@ def upsert_rollup_sink(path: str):
     return sink
 
 
-def write_stream_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    trigger_once: bool = True,
-):
-    """Append-mode parquet sink with checkpointing (exactly-once files)."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def foreach_batch_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    checkpoint: str,
-):
-    """Streaming JDBC sink via foreachBatch — the streaming analog of the
-    reference's to_sql load (§2A #26): each micro-batch is written with
-    the same distributed JDBC writer the batch path uses."""
-    from dwh_with_dask_spark.sources.jdbc import write_jdbc
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_jdbc(batch_df, url, table, mode="append")
-
-    return (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-
-
 STATE_SCHEMA = "n_events long, total_value double"
 USER_STATS_SCHEMA = "user_id long, n_events long, total_value double"
 

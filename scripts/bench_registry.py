@@ -7,7 +7,7 @@ Usage:
 
 With no query names, times the whole registry EXCEPT the bench HEADLINE
 set (those are bench.py's job). Writes a JSON map {name: {median, min,
-max}} to --out (default scripts/registry_times_r15.json, merged with any
+max}} to --out (default scripts/registry_times.json, merged with any
 existing content so the sweep can run in slices).
 """
 
@@ -33,7 +33,7 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument(
         "--out",
-        default=os.path.join(os.path.dirname(__file__), "registry_times_r15.json"),
+        default=os.path.join(os.path.dirname(__file__), "registry_times.json"),
     )
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()

@@ -118,6 +118,68 @@ def timed_spark(spark, name, fn, sf_dir, runs) -> float:
     return med(xs)
 
 
+BM25_TERMS = ["data", "model", "training", "quality", "filter"]
+
+
+def bm25_segment_curve(spark) -> dict:
+    """Probe latency of the stored BM25 index vs its segment count: build
+    the sf1 corpus index as 1 / 8 / 64 segments (same rows, same
+    buckets), time the indexed probe (median of 5 after one warmup),
+    then compact the 64-segment index and re-time. Asserts the probe
+    answers are identical across layouts and after compaction. Returns
+    ``{"results": {segs: (build_s, probe_med_s)}, "compact_s",
+    "probe_after_compact"}``."""
+    import shutil
+
+    from dwh_with_dask_spark.operators import curation as C
+
+    work = os.path.join(REPO, ".localdata", "bm25_segexp")
+    docs = spark.read.parquet(os.path.join(SF1_DIR, "documents.parquet"))
+    os.makedirs(work, exist_ok=True)
+
+    def probe_median(path, runs=5):
+        C.bm25_search_indexed(spark, path, BM25_TERMS, k=10).collect()  # warmup
+        ts = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            rows = C.bm25_search_indexed(spark, path, BM25_TERMS, k=10).collect()
+            ts.append(time.perf_counter() - t0)
+        return statistics.median(ts), sorted(map(tuple, rows))
+
+    results, answers = {}, {}
+    for n_segs in (1, 8, 64):
+        path = os.path.join(work, f"idx_{n_segs}")
+        shutil.rmtree(path, ignore_errors=True)
+        t0 = time.perf_counter()
+        ids = docs.selectExpr(f"doc_id % {n_segs} AS g", "doc_id", "text")
+        C.build_bm25_index(
+            ids.filter("g = 0").select("doc_id", "text"),
+            path, n_buckets=64, overwrite=True,
+        )
+        for seg in range(1, n_segs):
+            C.refresh_bm25_index(
+                ids.filter(f"g = {seg}").select("doc_id", "text"), path
+            )
+        build_s = time.perf_counter() - t0
+        med, rows = probe_median(path)
+        results[n_segs] = (build_s, med)
+        answers[n_segs] = rows
+        print(f"segs={n_segs:3d} build={build_s:7.2f}s probe_med={med:6.3f}s",
+              flush=True)
+    assert answers[1] == answers[8] == answers[64], "probe answers diverged"
+    path64 = os.path.join(work, "idx_64")
+    t0 = time.perf_counter()
+    C.compact_bm25_index(spark, path64)
+    compact_s = time.perf_counter() - t0
+    med_c, rows_c = probe_median(path64)
+    assert rows_c == answers[64], "compaction changed answers"
+    return {
+        "results": results,
+        "compact_s": round(compact_s, 3),
+        "probe_after_compact": round(med_c, 4),
+    }
+
+
 TPCH_EXTRA = [
     "q4_order_priority",
     "q9_profit_by_nation_year",
@@ -671,9 +733,7 @@ def main() -> None:
         SX.TIMINGS = None
 
         # BM25 probe latency vs segment count + compaction
-        from scripts.exp_bm25_segments import run_curve
-
-        curve = run_curve(spark)
+        curve = bm25_segment_curve(spark)
 
         comparable = [r for r in rows if r[3] not in ("no oracle", "—")]
         total_s = sum(float(r[1]) for r in comparable)
@@ -716,7 +776,7 @@ def main() -> None:
             f.write(
                 "\nBM25 probe latency vs segment count (VERDICT r10 ask #6"
                 " — same\ncorpus, same buckets, identical answers asserted;"
-                " curve measured by\nscripts/exp_bm25_segments.run_curve):\n\n"
+                " curve measured by\nscripts/bench_scale.bm25_segment_curve):\n\n"
                 "| segments | build s | probe median s |\n| --- | --- | --- |\n"
             )
             for n_segs, (build_s, med_s) in sorted(curve["results"].items()):
@@ -1518,16 +1578,19 @@ def main() -> None:
         )
         nl_oracle = oracles["dedup_ngram_jaccard"].replace(">= 0.30", ">= 0.80")
         nl_rows = []
-        for name, op in (
-            ("naive inverted-index (t=0.8)", DD.ngram_jaccard_pairs),
-            ("prefix-filtered (t=0.8)", DD.ngram_jaccard_pairs_prefix),
+        for name, strategy in (
+            ("naive inverted-index (t=0.8)", "naive"),
+            ("prefix-filtered (t=0.8)", "prefix"),
         ):
+            def op(strategy=strategy):
+                return DD.pair_join(
+                    nl_docs, "jaccard", strategy, n=3, threshold=0.8
+                )
+
             s = timed_spark(
-                spark, name,
-                lambda sp, _d, op=op: op(nl_docs, n=3, threshold=0.8),
-                SKEWNL_DIR, args.runs,
+                spark, name, lambda sp, _d, op=op: op(), SKEWNL_DIR, args.runs
             )
-            n_pairs = op(nl_docs, n=3, threshold=0.8).count()
+            n_pairs = op().count()
             nl_rows.append((name, f"{s:.3f}", n_pairs))
             print(f"skewnl {name}: spark={s}s pairs={n_pairs}", flush=True)
         d_nl = med(time_duck(nl_duck, nl_oracle, args.runs))

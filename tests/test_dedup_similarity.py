@@ -43,7 +43,7 @@ def test_exact_dedup_groups(spark, near_dup_docs):
 def test_jaccard_finds_planted_near_dup(spark, near_dup_docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(near_dup_docs, threshold=0.3).collect()
+        for r in D.pair_join(near_dup_docs, "jaccard", threshold=0.3).collect()
     }
     assert pairs[(1, 2)] == 1.0
     assert 0.5 < pairs[(1, 3)] < 1.0
@@ -59,7 +59,7 @@ def test_minhash_lsh_agrees_with_exact_jaccard(spark, near_dup_docs):
     }
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(near_dup_docs, threshold=0.3).collect()
+        for r in D.pair_join(near_dup_docs, "jaccard", threshold=0.3).collect()
     }
     assert got[(1, 2)] == 1.0                  # identical docs always collide
     assert (1, 3) in got                       # near dup found by LSH
@@ -135,7 +135,7 @@ def test_minhash_vs_exact_on_documents_table(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        for r in D.pair_join(docs, "jaccard", threshold=0.5).collect()
     }
     lsh = {
         (r["id_a"], r["id_b"]): r["est_jaccard"]
@@ -363,35 +363,6 @@ def test_connected_components_random_graphs_property(spark):
             for r in D.dedup_components(ndf, edf).collect()
         }
         assert got == want, f"seed {seed}"
-
-
-def test_prefix_jaccard_equals_naive_across_thresholds(spark):
-    # Prefix filtering is pruning, not approximation: at every threshold
-    # the candidate-verify pipeline must return exactly the naive
-    # operator's rows (ids, counts, and the jaccard value itself).
-    # Deterministic varied corpus: overlapping word windows + planted
-    # dups across a range of doc lengths.
-    words = [f"w{i}" for i in range(60)]
-    rows = []
-    for d in range(30):
-        start, length = (d * 7) % 40, 8 + (d % 13)
-        toks = [words[(start + k) % 60] for k in range(length)]
-        rows.append((d, " ".join(toks)))
-    rows += [(100, rows[3][1]), (101, rows[3][1] + " extra tail words here")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    for t in (0.1, 0.3, 0.5, 0.8):
-        naive = {
-            (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs(docs, threshold=t).collect()
-        }
-        pref = {
-            (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs_prefix(docs, threshold=t).collect()
-        }
-        assert pref == naive, f"threshold {t}: prefix != naive"
-    # planted exact dup (3,100) has J=1.0, so even t=0.8 is non-vacuous
-    assert naive
 
 
 def test_incremental_dedup_against_stored_index(spark, tmp_path):
@@ -1853,11 +1824,11 @@ def test_containment_catches_subset_jaccard_misses(spark):
     )
     rows = {
         (r.id_a, r.id_b): r.containment
-        for r in D.containment_pairs(df, n=3, threshold=0.8).collect()
+        for r in D.pair_join(df, "containment", n=3, threshold=0.8).collect()
     }
     assert rows == {(1, 2): 1.0}  # contained direction only, exactly 1.0
     # symmetric Jaccard at the same threshold sees nothing
-    assert D.ngram_jaccard_pairs(df, n=3, threshold=0.8).count() == 0
+    assert D.pair_join(df, "jaccard", n=3, threshold=0.8).count() == 0
 
 
 def test_containment_matches_bruteforce_twin(spark):
@@ -1893,7 +1864,7 @@ def test_containment_matches_bruteforce_twin(spark):
                 want[(a, b)] = (len(sh[a] & sh[b]), len(sh[a]), len(sh[b]), c)
     got = {
         (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-        for r in D.containment_pairs(df, n=3, threshold=0.5).collect()
+        for r in D.pair_join(df, "containment", n=3, threshold=0.5).collect()
     }
     assert got == want
     assert (100, 0) in got and (0, 100) in got  # exact dup passes both ways
@@ -1967,11 +1938,11 @@ def test_containment_superset_of_jaccard_property(spark):
         t = rng.choice([0.2, 0.4, 0.6])
         jac = {
             frozenset((r.id_a, r.id_b))
-            for r in D.ngram_jaccard_pairs(df, n=3, threshold=t).collect()
+            for r in D.pair_join(df, "jaccard", n=3, threshold=t).collect()
         }
         con = {
             frozenset((r.id_a, r.id_b))
-            for r in D.containment_pairs(df, n=3, threshold=t).collect()
+            for r in D.pair_join(df, "containment", n=3, threshold=t).collect()
         }
         assert jac <= con, (
             f"seed {seed}, t={t}: jaccard pairs missing from containment: "
@@ -1979,33 +1950,66 @@ def test_containment_superset_of_jaccard_property(spark):
         )
 
 
-def test_containment_prefix_equals_naive(spark):
-    """containment_pairs_prefix is a pruning strategy, not a semantic
-    change: identical output to the naive plan on a corpus with planted
-    subsets and near-duplicates, across thresholds."""
+def _prefix_corpora(spark):
+    """Two deterministic varied corpora with planted exact duplicates
+    (J = C = 1.0, so every threshold below is non-vacuous): overlapping
+    word windows over a range of doc lengths, and random docs with a
+    subset-ish half copy."""
     import random
+
+    words = [f"w{i}" for i in range(60)]
+    windows = []
+    for d in range(30):
+        start, length = (d * 7) % 40, 8 + (d % 13)
+        windows.append((d, " ".join(words[(start + k) % 60] for k in range(length))))
+    windows += [(100, windows[3][1]), (101, windows[3][1] + " extra tail words here")]
 
     rng = random.Random(17)
     vocab = [f"w{i}" for i in range(25)]
-    docs = [
+    rand = [
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(4, 30))))
         for i in range(20)
     ]
-    docs.append((50, docs[0][1]))  # exact dup
-    toks = docs[1][1].split()
-    docs.append((51, " ".join(toks[: max(4, len(toks) // 2)])))  # subset-ish
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    for t in (0.5, 0.8):
-        naive = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-            for r in D.containment_pairs(df, n=3, threshold=t).collect()
-        }
-        pref = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r.containment)
-            for r in D.containment_pairs_prefix(df, n=3, threshold=t).collect()
-        }
-        assert pref == naive, f"t={t}"
-        assert naive, f"t={t}: fixture produced no pairs"
+    rand.append((50, rand[0][1]))  # exact dup
+    toks = rand[1][1].split()
+    rand.append((51, " ".join(toks[: max(4, len(toks) // 2)])))  # subset-ish
+    return [
+        (spark.createDataFrame(rows, "doc_id long, text string"), ts)
+        for rows, ts in ((windows, (0.1, 0.3, 0.5, 0.8)), (rand, (0.5, 0.8)))
+    ]
+
+
+@pytest.mark.parametrize("measure", ["jaccard", "containment"])
+def test_prefix_equals_naive(spark, measure):
+    """Prefix filtering is pruning, not approximation: at every
+    threshold the candidate-verify plan returns exactly the naive
+    plan's rows (ids, counts, and the score itself)."""
+    for docs, thresholds in _prefix_corpora(spark):
+        for t in thresholds:
+            naive, pref = (
+                {
+                    (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[measure])
+                    for r in D.pair_join(
+                        docs, measure, strategy, n=3, threshold=t
+                    ).collect()
+                }
+                for strategy in ("naive", "prefix")
+            )
+            assert pref == naive, f"threshold {t}: prefix != naive"
+            assert naive, f"threshold {t}: fixture produced no pairs"
+
+
+def test_pair_join_rejects_bad_arguments(spark, near_dup_docs):
+    """A cap only exists for the naive plan, so the prefix plan must not
+    ignore one silently; unknown measure/strategy names fail loudly."""
+    with pytest.raises(ValueError, match="max_shingle_freq"):
+        D.pair_join(
+            near_dup_docs, "jaccard", "prefix", threshold=0.3, max_shingle_freq=50
+        )
+    with pytest.raises(ValueError, match="unknown measure"):
+        D.pair_join(near_dup_docs, "cosine", threshold=0.3)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        D.pair_join(near_dup_docs, "jaccard", "capped", threshold=0.3)
 
 
 # ---------------------------------------------------------------------------
@@ -2047,9 +2051,17 @@ def _uniform_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _pair_rows(out, measure):
+    return {
+        (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[measure])
+        for r in out.collect()
+    }
+
+
 def test_pair_auto_dispatch_picks_measured_winner(spark):
-    """The probe classifies the two measured regimes correctly and the
-    dispatched result is bit-identical to the exact naive plan."""
+    """For both measures, the probe classifies the two measured regimes
+    correctly and the dispatched result is bit-identical to the exact
+    naive plan."""
     nat, uni = _natural_corpus(spark), _uniform_corpus(spark)
 
     # regime sanity: the fixtures actually have the df shapes the
@@ -2059,50 +2071,33 @@ def test_pair_auto_dispatch_picks_measured_winner(spark):
     assert s_nat["p90_df"] <= 2 and s_nat["max_df"] > 100
     assert s_uni["p90_df"] > 2
 
-    for metric, auto_fn, naive_fn, t in [
-        ("containment", D.containment_pairs_auto, D.containment_pairs, 0.8),
-        ("jaccard", D.ngram_jaccard_pairs_auto, D.ngram_jaccard_pairs, 0.3),
-    ]:
-        score = metric if metric == "jaccard" else "containment"
-        dec = {}
-        got = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in auto_fn(nat, threshold=t, decision_out=dec).collect()
-        }
-        assert dec["strategy"] == "prefix", (metric, dec["reason"])
-        want = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in naive_fn(nat, threshold=t).collect()
-        }
-        assert got == want and want, metric
-        if metric == "containment":
-            assert any(a == 1 and b == 9000 for a, b, in got)  # planted
-
-        dec = {}
-        got = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in auto_fn(uni, threshold=t, decision_out=dec).collect()
-        }
-        assert dec["strategy"] == "naive", (metric, dec["reason"])
-        want = {
-            (r.id_a, r.id_b): (r.n_common, r.n_a, r.n_b, r[score])
-            for r in naive_fn(uni, threshold=t).collect()
-        }
-        assert got == want and want, metric
+    for measure, t in (("containment", 0.8), ("jaccard", 0.3)):
+        for docs, strategy in ((nat, "prefix"), (uni, "naive")):
+            dec = {}
+            out = D.pair_join(docs, measure, "auto", threshold=t, decision_out=dec)
+            got = _pair_rows(out, measure)
+            assert dec["strategy"] == strategy, (measure, dec["reason"])
+            want = _pair_rows(D.pair_join(docs, measure, threshold=t), measure)
+            assert got == want and want, measure
+            if measure == "containment" and docs is nat:
+                assert (1, 9000) in got  # planted
 
 
 def test_pair_auto_capped_fallback_past_budget(spark):
     """Near-uniform df past the collision budget dispatches to the
-    frequency cap, choosing the largest candidate cap that fits."""
+    frequency cap, choosing the largest candidate cap that fits, and
+    returns the capped naive plan's rows for both measures."""
     uni = _uniform_corpus(spark)
     stats = D.shingle_df_stats(uni)
-    dec = {}
-    out = D.containment_pairs_auto(
-        uni, threshold=0.8, naive_budget=1, decision_out=dec
-    )
-    assert dec["strategy"] == "capped"
-    assert dec["cap"] == 10  # floor: even the tightest cap exceeds budget 1
-    out.collect()  # plan executes
+    for measure in ("jaccard", "containment"):
+        dec = {}
+        out = D.pair_join(
+            uni, measure, "auto", threshold=0.8, naive_budget=1, decision_out=dec
+        )
+        assert dec["strategy"] == "capped", measure
+        assert dec["cap"] == 10  # floor: even the tightest cap exceeds budget 1
+        want = D.pair_join(uni, measure, threshold=0.8, max_shingle_freq=10)
+        assert _pair_rows(out, measure) == _pair_rows(want, measure), measure
 
     # unit-level: the largest fitting candidate is chosen when one fits
     budget = stats["capped_volume"][25] + 1

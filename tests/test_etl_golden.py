@@ -322,3 +322,45 @@ def test_etl_driver_fixtures_regenerate_byte_identical(tmp_path):
         assert f1.read() == f2.read()
     with open(ED.NOTES_PDF_PATH, "rb") as f1, open(pdf2, "rb") as f2:
         assert f1.read() == f2.read()
+
+
+def test_read_excel_many_fixture_workbook(spark, tmp_path):
+    """Distributed many-workbook ingest over two copies of the committed
+    fixture workbook: binaryFile scan, executor-side stdlib OOXML parse,
+    schema-driven coercion. Each statement sheet yields its data rows
+    once per file, with values coerced from the SHEET_GRIDS strings
+    (a thousands separator or garbage coerces to NULL)."""
+    import shutil
+
+    from dwh_with_dask_spark.plans import etl_driver as ED
+    from dwh_with_dask_spark.sources.excel import read_excel_many
+
+    for name in ("wb_a.xlsx", "wb_b.xlsx"):
+        shutil.copyfile(ED.WORKBOOK_PATH, str(tmp_path / name))
+
+    def num(v):
+        try:
+            return float(v)
+        except (TypeError, ValueError):
+            return None
+
+    schema = (
+        "label string, current double, prior double, label_en string, "
+        "source_path string"
+    )
+    for label, sheet in ED.STATEMENT_SHEETS.items():
+        rows = read_excel_many(
+            spark, str(tmp_path), sheet_name=sheet, header=1, schema=schema
+        ).collect()
+        want = [
+            (lab, num(cur), num(prior), en)
+            for lab, cur, prior, en in ED.SHEET_GRIDS[label][2:]
+        ]
+        for name in ("wb_a.xlsx", "wb_b.xlsx"):
+            got = [
+                (r.label, r.current, r.prior, r.label_en)
+                for r in rows
+                if r.source_path.rsplit("/", 1)[-1] == name
+            ]
+            assert sorted(got, key=repr) == sorted(want, key=repr), (label, name)
+        assert len(rows) == 2 * len(want)

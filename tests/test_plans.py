@@ -491,9 +491,24 @@ def test_widen_adds_no_exchange_on_wide_input(spark):
     assert logical(out_narrow).count("RepartitionByExpression") == 1
 
 
-def test_jaccard_plan_no_shingle_reshuffle(spark):
-    """VERDICT r6 ask #2: watch the ACTUAL hazards of the Jaccard plan,
-    not just exchange counts. Two invariants on the real registry query:
+# Every registry query built on dedup.pair_join.
+PAIR_JOIN_QUERIES = (
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_prefix",
+    "dedup_ngram_jaccard_auto",
+    "dedup_ngram_jaccard_capped",
+    "dedup_containment",
+    "dedup_containment_prefix",
+    "dedup_containment_auto",
+    "dedup_containment_capped",
+    "dedup_connected_groups",
+)
+
+
+def test_jaccard_plan_no_shingle_reshuffle(spark, monkeypatch):
+    """VERDICT r6 ask #2: watch the ACTUAL hazards of the shingle-pair
+    plans, not just exchange counts. Two invariants on every registry
+    query built on ``pair_join`` (each measure and strategy):
 
     1. No tokenize re-inlining: the `split(lower(text))` tokenize
        expression must be bound exactly once per `__toks` projection in
@@ -510,26 +525,45 @@ def test_jaccard_plan_no_shingle_reshuffle(spark):
     """
     import re
 
-    df = QUERIES["dedup_ngram_jaccard"](spark, SF_CORRECT)
-    qe = df._jdf.queryExecution()
-    opt = qe.optimizedPlan().toString()
+    from dwh_with_dask_spark.operators import dedup
+    from dwh_with_dask_spark.operators.caching import release_caches
 
-    n_tokenize = opt.count("split(lower(")
-    n_bindings = len(re.findall(r"AS __toks#\d+", opt))
-    assert n_tokenize == n_bindings > 0, (
-        f"tokenize bound {n_tokenize}x for {n_bindings} __toks "
-        "projections — re-inlined into a lambda or a post-Generate "
-        "project (O(len²) hazard)"
-    )
+    # Check the frame pair_join returned, not the query's final frame:
+    # dedup_connected_groups ends in a pinned component lineage whose
+    # plan no longer shows the shingle stages.
+    built = []
+    real = dedup.pair_join
 
-    phys = qe.executedPlan().toString()
-    for line in phys.splitlines():
-        m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", line)
-        if m and "id#" in m.group(1):
-            assert "shingle#" not in m.group(1), (
-                "exploded shingle rows reshuffled on (id, shingle): "
-                + line.strip()
-            )
+    def spy(*args, **kwargs):
+        built.append(real(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(dedup, "pair_join", spy)
+    for name in PAIR_JOIN_QUERIES:
+        built.clear()
+        QUERIES[name](spark, SF_CORRECT)
+        assert len(built) == 1, f"{name}: built {len(built)} pair_join frames"
+        df = built[0]
+        qe = df._jdf.queryExecution()
+        opt = qe.optimizedPlan().toString()
+
+        n_tokenize = opt.count("split(lower(")
+        n_bindings = len(re.findall(r"AS __toks#\d+", opt))
+        assert n_tokenize == n_bindings > 0, (
+            f"{name}: tokenize bound {n_tokenize}x for {n_bindings} __toks "
+            "projections — re-inlined into a lambda or a post-Generate "
+            "project (O(len²) hazard)"
+        )
+
+        phys = qe.executedPlan().toString()
+        for line in phys.splitlines():
+            m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", line)
+            if m and "id#" in m.group(1):
+                assert "shingle#" not in m.group(1), (
+                    f"{name}: exploded shingle rows reshuffled on "
+                    "(id, shingle): " + line.strip()
+                )
+        release_caches(df)
 
 
 def test_widen_operator_results_partitioning_invariant(spark):

@@ -4,9 +4,10 @@ Ingests /root/reference/Data/FinancialStatement-2024-I-ACES.xlsx — the
 exact file the reference reads at project-dask.py:15,23-25 — through
 excel_to_parquet → pipeline_v2, and golden-asserts the
 `laporan_keuangan` shape (financial_statement.sql:3-10) including ID
-contiguity in concat order. Runs with openpyxl when installed, else the
-stdlib OOXML parser (sources.xlsx_lite); skips only if the workbook
-itself is absent.
+contiguity in concat order. Parses with the stdlib OOXML parser
+(sources.xlsx_lite); skips only if the workbook itself is absent.
+``tests/test_etl_golden.py`` runs the distributed reader over the committed
+fixture workbook, which is always present.
 """
 
 from __future__ import annotations
@@ -84,7 +85,7 @@ def test_real_workbook_pipeline_v2_golden(spark, tmp_path):
 
 def test_read_excel_many_distributed(spark, tmp_path):
     """Distributed many-workbook ingest: binaryFile scan + executor-side
-    OOXML parse (no openpyxl needed). Two copies of the real workbook →
+    OOXML parse. Two copies of the real workbook →
     per-file rows tagged with their source path."""
     import shutil
 
@@ -133,29 +134,3 @@ def test_read_excel_many_sheet_narrower_than_schema(spark, tmp_path):
     assert all(r["extra_metric"] is None and r["extra_note"] is None for r in rows)
     assert any(r["CurrentYearInstant"] is not None for r in rows)
 
-
-def test_xlsx_python_datasource_grid(spark):
-    """Spark 4 Python DataSource: spark.read.format('xlsx') parses one
-    worksheet per input partition executor-side (stdlib OOXML, no
-    optional deps) and emits the positional grid the Excel surface
-    consumes."""
-    from dwh_with_dask_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    df = (
-        spark.read.format("xlsx")
-        .option("sheets", "1000000,1311000")
-        .load(WORKBOOK)
-    )
-    assert df.rdd.getNumPartitions() == 2  # one per sheet
-    rows = df.collect()
-    per_sheet = {}
-    for r in rows:
-        per_sheet[r["sheet"]] = per_sheet.get(r["sheet"], 0) + 1
-    # raw row counts per BASELINE.md: 45 (general info) + 64 (Laba Rugi)
-    assert per_sheet == {"1000000": 45, "1311000": 64}
-    lk = [r for r in rows if r["cells"] and r["cells"][0] == "Kode entitas"]
-    assert lk and lk[0]["cells"][1] == "ACES"
-    # row_idx is dense per sheet
-    idx = sorted(r["row_idx"] for r in rows if r["sheet"] == "1000000")
-    assert idx == list(range(45))
